@@ -112,16 +112,17 @@ object FlightModel {
       .setMetricName(metric)
 
   /** M9 both metrics, defensively empty-safe (`helper_methods.py:346-369`).
-    * One pass: both metrics come from a single aggregate job (two evaluator
-    * calls would each replay the prediction lineage — measured 160 s of
-    * recompute at the 500k-row scale). */
+    * One pass: the row count and both metrics come from a single aggregate
+    * job (an emptiness probe or two evaluator calls would each replay the
+    * prediction lineage — measured 160 s of recompute at the 500k-row
+    * scale). No rows → None. */
   def evaluate(predictions: DataFrame): Option[(Double, Double)] = {
-    if (predictions.isEmpty) return None
     val d = col("prediction") - col(TargetCol)
     val row = predictions.agg(
+      count(lit(1)),
       avg(abs(d)).as("mae"),
       sqrt(avg(d * d)).as("rmse")).first()
-    Some((row.getDouble(0), row.getDouble(1)))
+    if (row.getLong(0) == 0) None else Some((row.getDouble(1), row.getDouble(2)))
   }
 
   /** ±10-minute three-way labels (`main.py:94-113`): prediction ≥ 10 →
